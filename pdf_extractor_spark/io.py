@@ -5,10 +5,25 @@ North-rule requirements implemented here:
     xxhash64(url), N)``) — co-locates any later per-url join/agg and
     bounds file counts at 10^12-document scale;
   - per-partition lineage manifests (rows in/out, parse failures,
-    payload bytes) written alongside every snapshot;
+    payload bytes, error classes) written alongside every snapshot;
   - resumability: ``filter_pending`` anti-joins the input against the
     committed result table so a re-run processes only missing urls —
     idempotent writes at the url granularity.
+
+Every write counts its lineage the same way, whether it is a one-shot
+overwrite, a batch resume or a streaming commit: list the committed
+files before and after the write, roll up only the files this write
+added, and merge that rollup into the previous manifest. A commit
+therefore costs O(its own write), never O(table). The manifest carries
+a fingerprint of the files it describes; an append that finds the
+table changed behind the manifest's back (a job killed between its
+data commit and its manifest write, a deleted partition) rebuilds the
+manifest from a full rescan instead of merging.
+
+Every engine read of the table passes ``TABLE_SCHEMA``, so no read
+pays a schema-inference job. Table and manifest live on a local or
+mounted filesystem path: both are listed and written with local file
+IO.
 
 Iceberg is the intended production format; its runtime jar is not in
 this environment (verified: 0 matches in pyspark/jars), so the layout
@@ -18,71 +33,26 @@ is format-agnostic behind ``write_result``.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import time
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .schemas import TABLE_SCHEMA
+
+_COUNT_KEYS = ("rows_in", "rows_out", "parse_failures", "payload_bytes")
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn("bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
 
 
-def _committed_partition_layout(
-    table_dir: str, spark: SparkSession | None = None
-) -> list[str] | None:
-    """Partition columns of an already-committed table, read from its
-    directory structure (None if nothing is committed yet). Appends
-    must adopt the on-disk layout: mixing bucket-only (pre-upgrade)
-    and bucket/ok directories in one table gives mixed partition
-    depths, which Spark's partition discovery rejects outright
-    ('Conflicting directory structures').
-
-    The verdict must come from ALL bucket dirs, not the first one
-    listdir happens to return: a killed job leaves EMPTY bucket dirs
-    (the committer mkdirs the destination before the per-file rename),
-    and deciding from such a debris dir would misclassify a bucket/ok
-    table as legacy bucket-only — the resumed append then writes
-    bucket-only files into it and every later read of the table fails
-    (found by the batch kill-and-resume fuzz). Empty dirs carry no
-    layout information (partition discovery only considers leaf
-    files); legacy layout is recognized by actual files directly under
-    a bucket dir."""
-    if os.path.isdir(table_dir):
-        saw_legacy_files = False
-        for entry in os.listdir(table_dir):
-            if not entry.startswith("bucket="):
-                continue
-            sub = os.path.join(table_dir, entry)
-            for e in os.listdir(sub):
-                if e.startswith("ok="):
-                    return ["bucket", "ok"]
-                if not e.startswith((".", "_")):
-                    saw_legacy_files = True
-        return ["bucket"] if saw_legacy_files else None
-    if spark is None:
-        return None
-    # non-local table (hdfs://, s3a://, …): os.path can't see it — ask
-    # Hadoop's FileSystem, else the migration guard silently no-ops in
-    # exactly the production deployment it exists for
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(table_dir)
-    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return None
-    saw_legacy_files = False
-    for st in fs.listStatus(path):
-        if not st.getPath().getName().startswith("bucket="):
-            continue
-        for sub in fs.listStatus(st.getPath()):
-            name = sub.getPath().getName()
-            if name.startswith("ok="):
-                return ["bucket", "ok"]
-            if not name.startswith((".", "_")):
-                saw_legacy_files = True
-    return ["bucket"] if saw_legacy_files else None
+def _read_table(spark: SparkSession, table_dir: str) -> DataFrame:
+    return spark.read.schema(TABLE_SCHEMA).parquet(table_dir)
 
 
 def write_result(
@@ -91,237 +61,142 @@ def write_result(
     n_buckets: int = 32,
     mode: str = "overwrite",
     input_bucketed: bool = False,
-    lineage: str = "auto",
 ) -> dict:
-    """Write the result table bucketed by url-hash + lineage manifests.
+    """Write the result table bucketed by url-hash + lineage manifest.
 
     All rows (including parse failures) land in the table — consumers
     filter on ``parse_ok`` (the reference's "no output for failed
-    docs" semantic, S4) — so lineage can be derived from the committed
-    snapshot itself with a column-pruned scan instead of a second
-    pipeline pass.
+    docs" semantic, S4) — so lineage is derived from the committed
+    files themselves with a column-pruned scan, not a second pipeline
+    pass. ``ok`` (= parse_ok) is a partition column next to
+    ``bucket``: success-only reads (``read_result``) never open a
+    failure file.
 
     ``input_bucketed=True`` is the production shape the north rule
     describes: the pages table is ALREADY bucketed on url-hash
     (Iceberg ``bucket(N, url)`` at ingest), so every scan task holds
     rows of exactly one bucket and the dynamic-partition write emits
     one file per (task, bucket) with NO exchange — the whole job is
-    scan → extract → write, shuffle-free. Bucket once at ingest,
-    never reshuffle: at 100 TB the repartition below would move the
-    entire result table across the cluster per run.
+    scan → extract → write, shuffle-free. Otherwise the rows are
+    repartitioned on the bucket key first, so each reduce task writes
+    into exactly one bucket dir (one file per bucket, not tasks×buckets
+    tiny files) and the shuffle overlaps the extraction stage.
 
-    ``lineage`` selects how per-bucket counts are produced:
-    ``"observe"`` rides the write itself (CollectMetrics — mandatory
-    for repeated appends like the streaming commit, where a post-write
-    rescan would re-aggregate the ENTIRE committed table on every
-    micro-batch, i.e. O(corpus) per trigger); ``"rescan"`` re-reads
-    the committed snapshot column-pruned. For ONE-SHOT batch writes
-    the rescan is the fast path: CollectMetricsExec evaluates its
-    3·n_buckets conditional-sum expressions per row OUTSIDE
-    whole-stage codegen, a drag measured at ~3 s over 480k docs at
-    local[32] (interleaved-min decomposition: observe write 19.8 s vs
-    the identical partitionBy write 16.9 s), while the replacement —
-    one pruned aggregation over 4 thin columns of the just-committed
-    snapshot, error-class triage fused into the same job — costs
-    ~0.5 s and shrinks as a fraction of job time at scale.
-    ``"auto"`` picks observe only for bucketed appends (resume into a
-    large committed table: observe is O(batch), rescan O(table));
-    every other combination rescans.
+    Lineage, in four steps: list the committed data files, write,
+    list again, and roll up the files the second listing added in ONE
+    ``groupBy(bucket, error_class)`` over four thin columns. An
+    overwrite adds every file; an append adds only its own, so a
+    streaming commit or a resume into a large table pays for its
+    micro-batch, not for the table. ``mode="append"`` is the resume
+    path: filter_pending already removed committed urls, so appending
+    is idempotent at url granularity.
+
+    Returns the cumulative manifest totals plus ``error_classes``,
+    ``write_sec`` and ``lineage_sec``.
     """
-    if lineage not in ("auto", "observe", "rescan"):
-        raise ValueError(f"unknown lineage mode {lineage!r}")
-    use_observe = lineage == "observe" or (
-        lineage == "auto" and input_bucketed and mode == "append"
-    )
+    if "://" in out_dir:
+        raise ValueError(f"out_dir must be a local or mounted path, got {out_dir!r}")
     t_write0 = time.time()
-    table_dir = os.path.join(out_dir, "result")
-    # `ok` is a PARTITION column (parse_ok stays in the data files for
-    # schema stability): failures land in their own ok=0 directories,
-    # so failure triage (_error_classes) partition-prunes to the tiny
-    # failure slice instead of rescanning the whole committed table,
-    # and success-only consumers (read_result) skip failure files
-    # entirely — at 100 TB that is the difference between "read back
-    # everything just written" and "read back the 1-3% that failed".
-    bucketed = with_bucket(result, n_buckets).withColumn(
-        "ok", F.col("parse_ok").cast("int")
-    )
-    part_cols = ["bucket", "ok"]
-    if mode == "append" and _committed_partition_layout(
-        table_dir, result.sparkSession
-    ) == ["bucket"]:
-        # migration guard: a streaming job resuming into a table written
-        # before the ok-partition upgrade keeps the legacy bucket-only
-        # layout (and drops the helper column so file schemas stay
-        # uniform); failure triage falls back to the parse_ok predicate
-        part_cols = ["bucket"]
-        bucketed = bucketed.drop("ok")
-    rebuild_manifest = use_observe and mode == "append" and _manifest_is_stale(
-        out_dir, table_dir, result.sparkSession
-    )
-    if use_observe and rebuild_manifest:
-        # Recovery: appending into a table whose manifest is missing OR
-        # stale — a job killed between the data commit and the manifest
-        # write leaves committed rows the manifest never counted, and
-        # merging observe metrics into that manifest would publish an
-        # undercount forever. The cumulative truth must be rebuilt from
-        # the committed snapshot; skip the observe metrics entirely
-        # (they would be computed during the write and then discarded).
-        to_write = (
-            bucketed if input_bucketed else bucketed.repartition(n_buckets, "bucket")
-        )
-        to_write.write.mode(mode).partitionBy(*part_cols).parquet(table_dir)
-        return _finish_lineage(result, out_dir, table_dir, n_buckets, t_write0)
-    if use_observe:
-        # Lineage via df.observe: the metrics ride the write itself —
-        # ZERO extra IO. At 100 TB the alternative (re-scanning the
-        # committed table, even column-pruned) reads back a slice of
-        # everything just written; CollectMetrics costs one pass of
-        # per-row conditional sums that scales with executors instead.
-        # (The one-shot batch non-bucketed path keeps the rescan: it already pays an
-        # exchange, and the rescan re-aggregates appends for free.)
-        from pyspark.sql import Observation
-
-        metrics = []
-        for b in range(n_buckets):
-            hit = F.col("bucket") == b
-            metrics.extend(
-                [
-                    F.sum(F.when(hit, 1).otherwise(0)).alias(f"in_{b}"),
-                    F.sum(F.when(hit & F.col("parse_ok"), 1).otherwise(0)).alias(f"out_{b}"),
-                    F.sum(
-                        F.when(hit, F.col("payload_bytes")).otherwise(F.lit(0))
-                    ).alias(f"bytes_{b}"),
-                ]
-            )
-        obs = Observation()
-        observed = bucketed.observe(obs, metrics[0], *metrics[1:])
-        if not input_bucketed:
-            # observe-lineage on unbucketed input (streaming commits):
-            # the bucket repartition still applies, above the metrics
-            observed = observed.repartition(n_buckets, "bucket")
-        observed.write.mode(mode).partitionBy(*part_cols).parquet(table_dir)
-        t_write1 = time.time()
-        try:
-            m = obs.get
-        except Exception:
-            # an EMPTY micro-batch (garbage-only archive / all re-ships)
-            # executes zero tasks, so the CollectMetrics row never
-            # materializes — found by the checkpoint-kill fuzz. But an
-            # observe failure is not PROOF the batch was empty (a
-            # listener error on a non-empty batch would silently
-            # undercount the manifest forever if zeroed), so fall back
-            # to the rescan estimator: it recomputes cumulative truth
-            # from the committed snapshot, and itself tolerates a
-            # schemaless (never-written) table dir.
-            return _finish_lineage(result, out_dir, table_dir, n_buckets, t_write0)
-        lineage_rows = []
-        for b in range(n_buckets):
-            rows_in = int(m.get(f"in_{b}") or 0)
-            rows_out = int(m.get(f"out_{b}") or 0)
-            if rows_in == 0:
-                continue
-            lineage_rows.append(
-                {
-                    "bucket": b,
-                    "rows_in": rows_in,
-                    "rows_out": rows_out,
-                    "parse_failures": rows_in - rows_out,
-                    "payload_bytes": int(m.get(f"bytes_{b}") or 0),
-                }
-            )
-        return _write_manifest(
-            out_dir, n_buckets, lineage_rows, t_write0, t_write1,
-            merge_previous=(mode == "append"),
-            error_classes=_error_classes(result.sparkSession, table_dir),
-        )
-    # repartition on the bucket key before the write: each reduce task
-    # then writes into exactly one bucket dir (one file per bucket,
-    # not tasks×buckets tiny files — measured 13s vs 0s of overhead at
-    # 240k docs/32 cores), and the shuffle overlaps the extraction
-    # stage, so the write costs ~nothing end-to-end. When the input
-    # arrives bucket-partitioned (Iceberg bucket(N, url) ingest shape)
-    # every scan task already holds exactly one bucket, so the
-    # exchange is skipped and the whole job stays shuffle-free.
-    # mode="append" is the resume path: filter_pending already removed
-    # committed urls, so appending is idempotent at url granularity
-    to_write = (
-        bucketed if input_bucketed else bucketed.repartition(n_buckets, "bucket")
-    )
-    to_write.write.mode(mode).partitionBy(*part_cols).parquet(table_dir)
-    return _finish_lineage(result, out_dir, table_dir, n_buckets, t_write0)
-
-
-def _manifest_is_stale(out_dir: str, table_dir: str, spark: SparkSession) -> bool:
-    """True when the lineage manifest does not describe the committed
-    table — either it is missing, unreadable, or its cumulative
-    ``rows_in`` disagrees with the committed row count (a job killed
-    between the data commit and the manifest write leaves exactly this
-    state; so does an overwrite killed before its manifest over a
-    pre-existing table).  The count() is parquet-footer metadata, not
-    a data scan, so the check is cheap enough to run on every append."""
-    manifest_path = os.path.join(out_dir, "_lineage", "manifest.json")
-    try:
-        with open(manifest_path, encoding="utf-8") as f:
-            recorded = int(json.load(f)["totals"]["rows_in"])
-    except Exception:
-        return True  # missing or unreadable: rebuild
-    try:
-        committed = spark.read.parquet(table_dir).count()
-    except Exception:
-        return False  # nothing committed yet: nothing to be stale about
-    return committed != recorded
-
-
-def _finish_lineage(
-    result: DataFrame, out_dir: str, table_dir: str, n_buckets: int, t_write0: float
-) -> dict:
-    # Per-bucket lineage from the committed snapshot with ONE
-    # column-pruned aggregation job (bucket is a partition column —
-    # free; parse_ok/error/payload_bytes are the only data columns
-    # read). Error-class triage is FUSED into the same scan at grain
-    # (bucket, error_class) — error_class is NULL for successes, the
-    # message prefix extract.py records for failures — so the batch
-    # path pays one small job, not a rollup job plus a separate
-    # _error_classes job. The collect is bounded by
-    # n_buckets × (1 + n_error_classes) rows.
-    t_write1 = time.time()
     spark = result.sparkSession
+    table_dir = os.path.join(out_dir, "result")
+    append = mode == "append"
+    before = _committed_files(table_dir) if append else {}
+    previous = _read_manifest(out_dir) if append else None
+    bucketed = with_bucket(result, n_buckets).withColumn("ok", F.col("parse_ok").cast("int"))
+    to_write = bucketed if input_bucketed else bucketed.repartition(n_buckets, "bucket")
+    to_write.write.mode(mode).partitionBy("bucket", "ok").parquet(table_dir)
+    t_write1 = time.time()
+
+    after = _committed_files(table_dir)
+    if previous is not None and previous.get("fingerprint") == _fingerprint(before):
+        # file names carry the write job's UUID, so the bare names pick
+        # out exactly this write's files in every partition dir
+        added = sorted({os.path.basename(f) for f in after.keys() - before.keys()})
+        partitions, error_classes = _rollup(spark, table_dir, added)
+        partitions = _merge(previous["partitions"], partitions)
+        error_classes += Counter(previous.get("error_classes", {}))
+    else:
+        # overwrite, first write, or a manifest that no longer describes
+        # the committed files (missing, torn, or stale after a crash
+        # between data commit and manifest write): count the whole table
+        partitions, error_classes = _rollup(spark, table_dir, None if after else [])
+    return _write_manifest(
+        out_dir, n_buckets, partitions, error_classes, _fingerprint(after), t_write0, t_write1
+    )
+
+
+def _committed_files(table_dir: str) -> dict[str, int]:
+    """Relative path → size of every committed data file. Skips what
+    Spark's reader skips: ``_temporary``, ``_SUCCESS`` and hidden
+    (``.``/``_``) entries at any depth; empty debris dirs from a killed
+    job hold no files and so never appear."""
+    files: dict[str, int] = {}
+    for root, dirs, names in os.walk(table_dir):
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+        rel = os.path.relpath(root, table_dir)
+        for name in names:
+            if not name.startswith((".", "_")):
+                files[os.path.normpath(os.path.join(rel, name))] = os.path.getsize(
+                    os.path.join(root, name)
+                )
+    return files
+
+
+def _fingerprint(files: dict[str, int]) -> dict[str, list]:
+    """Per partition dir: [file count, bytes, digest of the file names].
+    Equal fingerprints mean the same committed files (file names carry
+    the writing job's UUID, so a rewrite never reproduces a name)."""
+    per_dir: dict[str, list[str]] = {}
+    for path in files:
+        per_dir.setdefault(os.path.dirname(path), []).append(path)
+    return {
+        d: [
+            len(paths),
+            sum(files[p] for p in paths),
+            hashlib.sha1("\n".join(sorted(paths)).encode()).hexdigest()[:16],
+        ]
+        for d, paths in sorted(per_dir.items())
+    }
+
+
+def _read_manifest(out_dir: str) -> dict | None:
     try:
-        written = spark.read.parquet(table_dir)
-    except Exception:
-        # Nothing committed yet AND this write appended zero rows — a
-        # normal streaming state (a micro-batch whose archives salvage
-        # no records, or whose urls were all re-ships) leaves the table
-        # dir schemaless; found by the checkpoint-kill fuzz
-        # (tools/fuzz_sweep.py --stream-warc). The truthful manifest is
-        # all-zero totals, not a failed commit.
-        return _write_manifest(
-            out_dir, n_buckets, [], t_write0, t_write1, error_classes={}
-        )
+        with open(os.path.join(out_dir, "_lineage", "manifest.json"), encoding="utf-8") as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None  # missing or torn: the caller rebuilds
+
+
+def _rollup(
+    spark: SparkSession, table_dir: str, file_names: list[str] | None
+) -> tuple[list[dict], Counter]:
+    """Per-bucket counts and per-error-class failures of the committed
+    files named ``file_names`` (all files when None) in ONE column-pruned
+    aggregation: bucket and ok are partition columns, error and
+    payload_bytes the only data columns read. The ``_metadata.file_name``
+    filter prunes files at planning, so unnamed files are never opened.
+    The error class is the message prefix extract.py records
+    ('PdfError', 'unsupported_payload', ...); the collect is bounded by
+    n_buckets × (1 + n_error_classes) rows."""
+    if file_names == []:
+        return [], Counter()
+    df = _read_table(spark, table_dir)
+    if file_names is not None:
+        df = df.filter(F.col("_metadata.file_name").isin(file_names))
     err_class = F.when(
-        ~F.col("parse_ok"),
+        F.col("ok") == 0,
         F.substring_index(F.coalesce(F.col("error"), F.lit("unknown")), ":", 1),
     )
     grouped = (
-        written.groupBy("bucket", err_class.alias("error_class"))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("payload_bytes").alias("payload_bytes"),
-        )
+        df.groupBy("bucket", err_class.alias("error_class"))
+        .agg(F.count("*").alias("n"), F.sum("payload_bytes").alias("payload_bytes"))
         .collect()
     )
     per_bucket: dict[int, dict] = {}
-    error_classes: dict[str, int] = {}
+    error_classes: Counter = Counter()
     for r in grouped:
         b = per_bucket.setdefault(
-            int(r["bucket"]),
-            {
-                "bucket": int(r["bucket"]),
-                "rows_in": 0,
-                "rows_out": 0,
-                "parse_failures": 0,
-                "payload_bytes": 0,
-            },
+            r["bucket"], {"bucket": r["bucket"], **dict.fromkeys(_COUNT_KEYS, 0)}
         )
         b["rows_in"] += r["n"]
         b["payload_bytes"] += int(r["payload_bytes"] or 0)
@@ -329,99 +204,52 @@ def _finish_lineage(
             b["rows_out"] += r["n"]
         else:
             b["parse_failures"] += r["n"]
-            error_classes[r["error_class"]] = (
-                error_classes.get(r["error_class"], 0) + r["n"]
-            )
-    lineage_rows = [per_bucket[b] for b in sorted(per_bucket)]
-    return _write_manifest(
-        out_dir, n_buckets, lineage_rows, t_write0, t_write1,
-        error_classes=error_classes,
-    )
+            error_classes[r["error_class"]] += r["n"]
+    return [per_bucket[b] for b in sorted(per_bucket)], error_classes
 
 
-def _error_classes(spark: SparkSession, table_dir: str) -> dict[str, int]:
-    """Per-error-class failure counts from the committed snapshot.
-
-    The class is the message prefix extract.py records ('PdfError',
-    'unsupported_payload', 'no_text_blocks', ...). The failure rows
-    live in their own ok=0 partition directories, so this scan
-    PARTITION-PRUNES to the failure slice — it physically reads only
-    the 1-3% of a web corpus that failed, even at 100 TB, and it keeps
-    the observe fast path free of a hardcoded class list. (Tables
-    written before the ok partition existed fall back to a parse_ok
-    predicate over the full table.)"""
-    try:
-        df = spark.read.parquet(table_dir)
-    except Exception:
-        return {}  # zero rows ever committed: no failure classes either
-    pred = (F.col("ok") == 0) if "ok" in df.columns else ~F.col("parse_ok")
-    failed = (
-        df.filter(pred)
-        .select(
-            F.substring_index(
-                F.coalesce(F.col("error"), F.lit("unknown")), ":", 1
-            ).alias("error_class")
-        )
-    )
-    return {
-        r["error_class"]: r["n"]
-        for r in failed.groupBy("error_class").agg(F.count("*").alias("n")).collect()
-    }
+def _merge(previous: list[dict], added: list[dict]) -> list[dict]:
+    merged = {r["bucket"]: dict(r) for r in previous}
+    for r in added:
+        if r["bucket"] in merged:
+            for k in _COUNT_KEYS:
+                merged[r["bucket"]][k] += r[k]
+        else:
+            merged[r["bucket"]] = r
+    return [merged[b] for b in sorted(merged)]
 
 
 def _write_manifest(
     out_dir: str,
     n_buckets: int,
-    lineage_rows: list[dict],
+    partitions: list[dict],
+    error_classes: dict[str, int],
+    fingerprint: dict[str, list],
     t_write0: float,
     t_write1: float,
-    merge_previous: bool = False,
-    error_classes: dict[str, int] | None = None,
 ) -> dict:
     lineage_dir = os.path.join(out_dir, "_lineage")
     os.makedirs(lineage_dir, exist_ok=True)
     manifest_path = os.path.join(lineage_dir, "manifest.json")
-    if merge_previous and os.path.exists(manifest_path):
-        # observe only sees THIS write's rows; appends (resume) merge
-        # the prior snapshot so totals stay cumulative like the rescan
-        with open(manifest_path, encoding="utf-8") as f:
-            prev = {p["bucket"]: p for p in json.load(f).get("partitions", [])}
-        merged: dict[int, dict] = dict(prev)
-        for r in lineage_rows:
-            b = r["bucket"]
-            if b in merged:
-                merged[b] = {
-                    "bucket": b,
-                    **{
-                        k: merged[b][k] + r[k]
-                        for k in ("rows_in", "rows_out", "parse_failures", "payload_bytes")
-                    },
-                }
-            else:
-                merged[b] = r
-        lineage_rows = [merged[b] for b in sorted(merged)]
     snapshot = {
         "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
         "n_buckets": n_buckets,
-        "partitions": lineage_rows,
-        "totals": {
-            "rows_in": sum(r["rows_in"] for r in lineage_rows),
-            "rows_out": sum(r["rows_out"] for r in lineage_rows),
-            "parse_failures": sum(r["parse_failures"] for r in lineage_rows),
-            "payload_bytes": sum(r["payload_bytes"] or 0 for r in lineage_rows),
-        },
+        "partitions": partitions,
+        "totals": {k: sum(r[k] for r in partitions) for k in _COUNT_KEYS},
         # why each failure failed, not just how many — the triage
         # signal an operator needs before re-running a 10^12-doc job
-        "error_classes": dict(sorted((error_classes or {}).items())),
+        "error_classes": dict(sorted(error_classes.items())),
+        # the committed files this manifest describes (freshness check)
+        "fingerprint": fingerprint,
     }
-    # tmp + atomic rename: a job killed mid-dump must never leave a
-    # torn manifest.json visible — readers either see the previous
-    # complete snapshot or the new one ( _manifest_is_stale already
-    # tolerates an unreadable file, but external consumers of the
-    # manifest should not have to)
+    # tmp + fsync + atomic rename: neither a killed job nor a machine
+    # crash leaves a torn manifest.json visible — readers see the
+    # previous complete snapshot or the new one
     tmp_path = manifest_path + ".tmp"
     with open(tmp_path, "w", encoding="utf-8") as f:
         json.dump(snapshot, f, indent=2)
+        f.flush()
+        os.fsync(f.fileno())
     os.replace(tmp_path, manifest_path)
     return {
         **snapshot["totals"],
@@ -484,13 +312,12 @@ def write_json_files(result: DataFrame, out_dir: str) -> int:
 
 
 def read_result(spark: SparkSession, out_dir: str, include_failed: bool = False) -> DataFrame:
-    df = spark.read.parquet(os.path.join(out_dir, "result"))
+    df = _read_table(spark, os.path.join(out_dir, "result"))
     if include_failed:
         return df.drop("ok")
     # filter on the ok PARTITION column (not the parse_ok data column)
     # so the success-only read never opens a failure file
-    pred = (F.col("ok") == 1) if "ok" in df.columns else F.col("parse_ok")
-    return df.filter(pred).drop("ok")
+    return df.filter(F.col("ok") == 1).drop("ok")
 
 
 def filter_pending(pages: DataFrame, out_dir: str) -> DataFrame:
@@ -499,7 +326,7 @@ def filter_pending(pages: DataFrame, out_dir: str) -> DataFrame:
     spark = pages.sparkSession
     table_dir = os.path.join(out_dir, "result")
     try:
-        done = spark.read.parquet(table_dir).select("url")
+        done = _read_table(spark, table_dir).select("url")
     except Exception:
         return pages  # nothing committed yet
     return pages.join(done, "url", "left_anti")

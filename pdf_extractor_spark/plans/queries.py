@@ -12,10 +12,15 @@ __spark_entry__ as rows-only queries.
 
 from __future__ import annotations
 
+import logging
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from . import relational as R
+
+_log = logging.getLogger(__name__)
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -1461,6 +1466,7 @@ def outline_stats(spark, sf_dir):
 
 _HTML_STATS_N_GEN = 151
 _HTML_STATS_SEED = 77_000
+_HTML_GOLDEN_DIR = Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "html_golden"
 
 
 def _html_digest_rows(items: list[tuple[str, dict | None]]):
@@ -1523,9 +1529,8 @@ def _html_stats_oracle() -> str | None:
     context) — the query then runs rows-only."""
     import json as _json
     import random
-    from pathlib import Path as _Path
 
-    fix = _Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "html_golden"
+    fix = _HTML_GOLDEN_DIR
     if not (fix / "expected.json").exists():
         return None
     from ..operators.html_extract import extract_html
@@ -1582,12 +1587,10 @@ def html_stats(spark, sf_dir):
     Reference scope: SURVEY §2.11."""
     import pandas as pd
 
-    from pathlib import Path as _Path
-
     from .. import corpus as corpus_mod
     from ..operators.extract import extract_pages
 
-    fix = _Path(__file__).resolve().parents[2] / "tests" / "fixtures" / "html_golden"
+    fix = _HTML_GOLDEN_DIR
     fixtures = None
     if fix.exists():
         fixtures = (
@@ -1601,10 +1604,16 @@ def html_stats(spark, sf_dir):
                 F.col("content").alias("html"),
             )
         )
-    # else: shipped-zip context (tests/ not on disk) — the oracle
-    # generator returns None there too, so the query degrades to a
-    # rows-only run over the generated slice instead of crashing on a
-    # nonexistent path
+    else:
+        # shipped-zip context (tests/ not on disk): the oracle generator
+        # returns None there too, so the query degrades to a rows-only
+        # run over the generated slice instead of crashing on a
+        # nonexistent path — say so, a rows-only pass is not a hash match
+        _log.warning(
+            "html_stats: golden fixtures not found at %s; running rows-only "
+            "over the generated pages",
+            fix,
+        )
 
     def gen(batches):
         import random

@@ -93,6 +93,17 @@ RESULT_SCHEMA = T.StructType(
     ]
 )
 
+# The committed result table (io.write_result): RESULT_SCHEMA plus the
+# two partition columns. Every engine read of the table passes it, so
+# no read pays a schema-inference job over the table's files.
+TABLE_SCHEMA = T.StructType(
+    RESULT_SCHEMA.fields
+    + [
+        T.StructField("bucket", T.IntegerType(), True),
+        T.StructField("ok", T.IntegerType(), True),
+    ]
+)
+
 # HTML main-content extraction result (north-rule addition, SURVEY §2.11)
 HTML_RESULT_SCHEMA = T.StructType(
     [

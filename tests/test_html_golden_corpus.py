@@ -161,3 +161,24 @@ def test_outline_levels():
     semantic = EXPECTED["main_article_semantics"]
     # the banner h1 lives in <header> (dropped); only the article h1 remains
     assert [e["text"] for e in semantic["outline"]] == ["Actual Article Heading"]
+
+
+def test_html_stats_warns_when_fixtures_absent(spark, tmp_path, monkeypatch, caplog):
+    """Without the golden fixtures on disk (a shipped zip), html_stats
+    runs rows-only over the generated pages. It must say so: a silent
+    rows-only pass reads like a hash-matched one."""
+    import logging
+
+    from pdf_extractor_spark.plans import queries as Q
+
+    monkeypatch.setattr(Q, "_HTML_GOLDEN_DIR", tmp_path / "absent")
+    with caplog.at_level(logging.WARNING, logger=Q.__name__):
+        Q.html_stats(spark, None)
+    assert any(
+        r.levelno == logging.WARNING and "rows-only" in r.getMessage() for r in caplog.records
+    )
+    caplog.clear()
+    monkeypatch.setattr(Q, "_HTML_GOLDEN_DIR", FIXTURE_DIR)
+    with caplog.at_level(logging.WARNING, logger=Q.__name__):
+        Q.html_stats(spark, None)
+    assert not caplog.records

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import json
 import shutil
+import time
+import uuid
 from pathlib import Path
 
 import pytest
@@ -33,9 +35,10 @@ def _pages(spark):
     return corpus.distributed_pages(spark, N_DOCS, seed=SEED)
 
 
-def _run_full(spark, out_dir: str, lineage: str = "auto") -> dict:
+def _run_full(spark, out_dir: str, input_bucketed: bool = False) -> dict:
     return write_result(
-        extract_pages(_pages(spark)), out_dir, n_buckets=N_BUCKETS, lineage=lineage
+        extract_pages(_pages(spark)), out_dir,
+        n_buckets=N_BUCKETS, input_bucketed=input_bucketed,
     )
 
 
@@ -65,13 +68,20 @@ def _truncate(out_dir: str, keep_buckets: int) -> None:
     shutil.rmtree(Path(out_dir, "_lineage"), ignore_errors=True)
 
 
-@pytest.mark.parametrize("lineage", ["auto", "observe"])
-def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path, lineage):
-    full_dir = str(tmp_path / f"full_{lineage}")
-    kill_dir = str(tmp_path / f"kill_{lineage}")
+# Both write shapes must resume exactly. "auto": write_result
+# repartitions the rows on the bucket key, one file per bucket.
+# "observe": input_bucketed=True keeps the input's partitioning, so
+# every task writes into the bucket dirs of the rows it holds and the
+# appended files are picked out of many files per bucket dir.
+@pytest.mark.parametrize(
+    "input_bucketed", [pytest.param(False, id="auto"), pytest.param(True, id="observe")]
+)
+def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path, input_bucketed):
+    full_dir = str(tmp_path / "full")
+    kill_dir = str(tmp_path / "kill")
 
-    _run_full(spark, full_dir, lineage=lineage)
-    _run_full(spark, kill_dir, lineage=lineage)
+    _run_full(spark, full_dir, input_bucketed)
+    _run_full(spark, kill_dir, input_bucketed)
 
     _truncate(kill_dir, keep_buckets=10)
     committed = {r["url"] for r in spark.read.parquet(f"{kill_dir}/result").select("url").collect()}
@@ -85,14 +95,14 @@ def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path, lineage)
 
     write_result(
         extract_pages(pending), kill_dir,
-        n_buckets=N_BUCKETS, mode="append", lineage=lineage,
+        n_buckets=N_BUCKETS, mode="append", input_bucketed=input_bucketed,
     )
 
     # table rows identical — outline_json bytes included
     assert _table_rows(spark, kill_dir) == _table_rows(spark, full_dir)
     # cumulative manifest identical to the uninterrupted run's (the
-    # observe path rebuilds from the snapshot when the manifest died
-    # with the job, instead of publishing resumed-rows-only counts)
+    # append rebuilds from the snapshot when the manifest died with the
+    # job, instead of publishing resumed-rows-only counts)
     assert _manifest(kill_dir) == _manifest(full_dir)
     # exactly-once at url granularity
     n = spark.read.parquet(f"{kill_dir}/result").count()
@@ -103,36 +113,31 @@ def test_truncate_resume_rebuilds_byte_identical_table(spark, tmp_path, lineage)
 def test_stale_manifest_detected_and_rebuilt(spark, tmp_path):
     """Kill window the truncate test can't reach: run B's DATA commit
     succeeded but its manifest write didn't, so the manifest on disk is
-    run A's — present, readable, and WRONG. The next append must detect
-    the rows_in/committed-count mismatch and rebuild from the snapshot
-    instead of merging into the stale counts."""
+    run A's — present, readable, and WRONG. The next append must see
+    that the committed files no longer match the manifest's fingerprint
+    and rebuild from the snapshot instead of merging into the stale
+    counts."""
     out = str(tmp_path / "stale")
     full = str(tmp_path / "stale_full")
-    _run_full(spark, full, lineage="observe")
+    _run_full(spark, full)
 
     # run A: first half (corpus(N/2) is a prefix of corpus(N))
     half = corpus.distributed_pages(spark, N_DOCS // 2, seed=SEED)
-    write_result(extract_pages(half), out, n_buckets=N_BUCKETS, lineage="observe")
+    write_result(extract_pages(half), out, n_buckets=N_BUCKETS)
     manifest_path = Path(out, "_lineage", "manifest.json")
     run_a_manifest = manifest_path.read_text()
 
     # run B: append the rest, then simulate death-before-manifest by
     # restoring run A's manifest over run B's
     pending = filter_pending(_pages(spark), out)
-    write_result(
-        extract_pages(pending), out,
-        n_buckets=N_BUCKETS, mode="append", lineage="observe",
-    )
+    write_result(extract_pages(pending), out, n_buckets=N_BUCKETS, mode="append")
     manifest_path.write_text(run_a_manifest)
 
     # run C: nothing left to process; the empty append must still
     # notice the stale manifest and publish cumulative truth
     none_left = filter_pending(_pages(spark), out)
     assert none_left.count() == 0
-    write_result(
-        extract_pages(none_left), out,
-        n_buckets=N_BUCKETS, mode="append", lineage="observe",
-    )
+    write_result(extract_pages(none_left), out, n_buckets=N_BUCKETS, mode="append")
     assert _manifest(out) == _manifest(full)
     assert _table_rows(spark, out) == _table_rows(spark, full)
 
@@ -149,3 +154,103 @@ def test_second_resume_is_a_noop(spark, tmp_path):
     )
     assert _table_rows(spark, out_dir) == before
     assert _manifest(out_dir)["totals"]["rows_in"] == N_DOCS
+
+
+def test_removed_ok_partition_rebuilds_manifest(spark, tmp_path):
+    """A committed ok= directory deleted behind the manifest's back
+    (operator surgery, a partial restore): the manifest still counts its
+    rows, the files are gone. The resume re-extracts exactly those urls
+    and must publish the uninterrupted run's manifest, not the old
+    counts plus the re-extracted rows."""
+    full, out = str(tmp_path / "full"), str(tmp_path / "out")
+    _run_full(spark, full)
+    _run_full(spark, out)
+    victim = sorted(Path(out, "result").glob("bucket=*/ok=1"))[0]
+    shutil.rmtree(victim)
+
+    pending = filter_pending(_pages(spark), out)
+    assert pending.count() > 0
+    write_result(extract_pages(pending), out, n_buckets=N_BUCKETS, mode="append")
+    assert _manifest(out) == _manifest(full)
+    assert _table_rows(spark, out) == _table_rows(spark, full)
+
+
+def test_debris_does_not_invalidate_manifest(spark, tmp_path):
+    """Empty bucket dirs and ``_temporary`` left by a killed job carry
+    no rows, so they must not make the manifest look stale: the next
+    append merges into the manifest instead of rescanning the table.
+    Proved by planting a marker in the manifest that only a merge can
+    carry forward."""
+    from pdf_extractor_spark import io as pio
+
+    out = str(tmp_path / "out")
+    _run_full(spark, out)
+    table = Path(out, "result")
+    fingerprint = pio._fingerprint(pio._committed_files(str(table)))
+    for b in range(N_BUCKETS, N_BUCKETS + 3):
+        (table / f"bucket={b}").mkdir()
+    (table / "bucket=0" / "ok=7").mkdir()
+    (table / "_temporary" / "0" / "task").mkdir(parents=True)
+    (table / "_temporary" / "0" / "task" / "part-0.parquet").write_bytes(b"x")
+    (table / "bucket=0" / ".part-0.parquet.crc").write_bytes(b"")
+    assert pio._fingerprint(pio._committed_files(str(table))) == fingerprint
+
+    manifest_path = Path(out, "_lineage", "manifest.json")
+    m = json.loads(manifest_path.read_text())
+    m["error_classes"]["marker"] = 1
+    manifest_path.write_text(json.dumps(m))
+    none_left = filter_pending(_pages(spark), out)
+    write_result(extract_pages(none_left), out, n_buckets=N_BUCKETS, mode="append")
+    assert _manifest(out)["error_classes"]["marker"] == 1
+    assert pio.read_result(spark, out, include_failed=True).count() == N_DOCS
+
+
+def _append_task_count(spark, frame, out_dir: str) -> int:
+    """Total tasks of every Spark job one append runs."""
+    sc = spark.sparkContext
+    group = f"append-{uuid.uuid4()}"
+    sc.setJobGroup(group, "append under test")
+    try:
+        write_result(frame, out_dir, n_buckets=4, mode="append")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        if all(j is not None and j.status == "SUCCEEDED" for j in jobs):
+            break
+        assert time.monotonic() < deadline, jobs
+        time.sleep(0.1)
+    stages = [tracker.getStageInfo(s) for j in jobs for s in j.stageIds]
+    return sum(s.numTasks for s in stages if s is not None)
+
+
+def test_append_cost_does_not_grow_with_table(spark, tmp_path):
+    """An append costs O(its own write): the same append into a table of
+    N committed files and into one of 4N runs the same number of tasks.
+    No part of the commit may scan, count or triage the whole table."""
+    from pdf_extractor_spark import io as pio
+
+    def frame(prefix: str, n: int):
+        return spark.createDataFrame(
+            [
+                (f"{prefix}{i}", i % 5 != 0, 100 + i, None if i % 5 else "PdfError: x", "{}")
+                for i in range(n)
+            ],
+            "url string, parse_ok boolean, payload_bytes long, error string, outline_json string",
+        )
+
+    tasks = {}
+    for n_files in (8, 32):
+        out = str(tmp_path / f"t{n_files}")
+        # input_bucketed: every input task writes its own file per
+        # (bucket, ok), so the seed's file count follows its partitions
+        write_result(frame("seed", 200).repartition(n_files // 4), out,
+                     n_buckets=4, input_bucketed=True)
+        assert len(pio._committed_files(f"{out}/result")) >= n_files
+        tasks[n_files] = _append_task_count(spark, frame("new", 20), out)
+        m = json.loads(Path(out, "_lineage", "manifest.json").read_text())
+        assert m["totals"]["rows_in"] == 220
+        assert m["error_classes"] == {"PdfError": 44}
+    assert tasks[8] == tasks[32], tasks

@@ -10,8 +10,8 @@ Each test pins one fix from the review of the round-3 diff:
    crawled HTML (unclosed <a>/<option>/<aside>, stray end tags, void
    tags) can no longer leak link/drop depth and silently discard the
    rest of the document
- - io.write_result(lineage=...) decouples lineage strategy from input
-   bucketing; observe-mode counts match the rescan's on the same data
+ - io.write_result counts each write's own files and merges them into
+   the manifest; an append's counts match a one-shot write's
  - streaming/pipeline.py stateful ops fall back to equivalent batch
    aggregates on non-streaming frames
 """
@@ -134,7 +134,7 @@ def test_stray_end_tags_and_void_tags_are_harmless():
     assert "universally acknowledged" in res["main_text"]
 
 
-# -- io.write_result lineage modes ---------------------------------------
+# -- io.write_result per-write lineage ----------------------------------
 
 
 def _manifest(out_dir: str) -> dict:
@@ -142,23 +142,29 @@ def _manifest(out_dir: str) -> dict:
         return json.load(f)
 
 
-def test_observe_lineage_matches_rescan_on_unbucketed_input(spark, tmp_path):
+def test_append_lineage_matches_one_shot_write(spark, tmp_path):
+    """The same rows written in one overwrite, or as an overwrite plus an
+    append that rolls up only its own files and merges, publish the same
+    counts, partitions and error classes."""
+    from pyspark.sql import functions as F
+
     from pdf_extractor_spark.schemas import PAGES_SCHEMA
 
     pages = spark.createDataFrame(
         corpus.build_pages_rows(60, seed=5), schema=PAGES_SCHEMA
     )
     result = extract.extract_pages(pages, keep_failed=True)
-    a, b = str(tmp_path / "rescan"), str(tmp_path / "observe")
-    stats_a = pio.write_result(result, a, n_buckets=8, lineage="rescan")
-    stats_b = pio.write_result(result, b, n_buckets=8, lineage="observe")
-    for k in ("rows_in", "rows_out", "parse_failures", "payload_bytes"):
+    first = F.pmod(F.xxhash64("url"), F.lit(3)) == 0
+    a, b = str(tmp_path / "one_shot"), str(tmp_path / "appended")
+    stats_a = pio.write_result(result, a, n_buckets=8)
+    pio.write_result(result.filter(first), b, n_buckets=8)
+    stats_b = pio.write_result(result.filter(~first), b, n_buckets=8, mode="append")
+    for k in ("rows_in", "rows_out", "parse_failures", "payload_bytes", "error_classes"):
         assert stats_a[k] == stats_b[k], k
+    assert stats_a["parse_failures"] > 0
     ma, mb = _manifest(a), _manifest(b)
     assert ma["partitions"] == mb["partitions"]
     assert ma["error_classes"] == mb["error_classes"]
-    with pytest.raises(ValueError, match="lineage"):
-        pio.write_result(result, str(tmp_path / "x"), lineage="bogus")
 
 
 # -- streaming/pipeline.py batch fallbacks -------------------------------

@@ -14,7 +14,6 @@ from pathlib import Path
 
 from pdf_extractor_spark import io as eio
 from pdf_extractor_spark.io import filter_pending, write_result
-from pdf_extractor_spark.operators.extract import extract_pages
 
 
 def _mk(spark, urls):
@@ -24,59 +23,45 @@ def _mk(spark, urls):
     )
 
 
-# -- 1. layout probe vs kill debris ------------------------------------------
+# -- 1. committed-file listing vs kill debris ---------------------------------
 
 
-def test_layout_probe_ignores_empty_debris_bucket_dirs(tmp_path, spark):
+def test_layout_probe_ignores_empty_debris_bucket_dirs(tmp_path):
     """A killed job leaves EMPTY bucket dirs (the committer mkdirs the
-    destination before the per-file rename). The layout probe must not
-    decide 'legacy bucket-only' from such a dir — that misclassification
-    made the resumed append write bucket-only files into a bucket/ok
-    table, after which every read failed with 'Conflicting directory
-    structures' (table bricked until manual surgery)."""
+    destination before the per-file rename). The committed-file listing
+    behind the manifest fingerprint must see only real data files, so
+    debris neither looks like a commit nor invalidates the manifest."""
     table = tmp_path / "result"
     (table / "bucket=7" / "ok=1").mkdir(parents=True)
+    (table / "bucket=7" / "ok=1" / "part-0.parquet").write_bytes(b"abc")
     # plant MANY empty debris dirs so one is listed before bucket=7
     for b in range(32):
         if b != 7:
             (table / f"bucket={b}").mkdir()
-    assert eio._committed_partition_layout(str(table)) == ["bucket", "ok"]
-    # hadoop-FileSystem branch (non-local URIs) must agree
-    assert eio._committed_partition_layout("file://" + str(table), spark) == [
-        "bucket",
-        "ok",
-    ]
+    assert eio._committed_files(str(table)) == {"bucket=7/ok=1/part-0.parquet": 3}
+    assert list(eio._fingerprint(eio._committed_files(str(table)))) == ["bucket=7/ok=1"]
 
 
-def test_layout_probe_all_empty_debris_is_none(tmp_path, spark):
-    """Only empty bucket dirs on disk = nothing committed: the probe
-    must answer None (fresh bucket/ok layout), not 'legacy'."""
+def test_layout_probe_all_empty_debris_is_none(tmp_path):
+    """Only empty bucket dirs on disk = nothing committed."""
     table = tmp_path / "result"
     for b in range(4):
-        (table / f"bucket={b}").mkdir(parents=True)
-    assert eio._committed_partition_layout(str(table)) is None
-    assert eio._committed_partition_layout("file://" + str(table), spark) is None
+        (table / f"bucket={b}" / "ok=1").mkdir(parents=True)
+    assert eio._committed_files(str(table)) == {}
+    assert eio._committed_files(str(tmp_path / "missing")) == {}
 
 
 def test_layout_probe_hidden_entries_not_legacy(tmp_path):
-    """Committer droppings inside a bucket dir (_temporary, .crc) are
-    not data files and must not be read as the legacy layout."""
+    """Committer droppings inside a bucket dir (_temporary, .crc,
+    _SUCCESS) are not data files and must not be listed as committed."""
     table = tmp_path / "result"
-    (table / "bucket=0" / "_temporary").mkdir(parents=True)
+    (table / "bucket=0" / "_temporary" / "0").mkdir(parents=True)
+    (table / "bucket=0" / "_temporary" / "0" / "part-9.parquet").write_bytes(b"x")
     (table / "bucket=0" / ".part-x.crc").write_bytes(b"")
+    (table / "_SUCCESS").write_bytes(b"")
     (table / "bucket=1" / "ok=0").mkdir(parents=True)
-    assert eio._committed_partition_layout(str(table)) == ["bucket", "ok"]
-
-
-def test_layout_probe_legacy_still_detected(tmp_path, spark):
-    """Real legacy tables (files directly under bucket=N/) still probe
-    as bucket-only — including when a debris dir sits next to them."""
-    legacy = eio.with_bucket(_mk(spark, [f"u{i}" for i in range(8)]), 4)
-    table = str(tmp_path / "result")
-    legacy.write.mode("overwrite").partitionBy("bucket").parquet(table)
-    (Path(table) / "bucket=99").mkdir()  # kill debris
-    assert eio._committed_partition_layout(table) == ["bucket"]
-    assert eio._committed_partition_layout("file://" + table, spark) == ["bucket"]
+    (table / "bucket=1" / "ok=0" / "part-1.parquet").write_bytes(b"xy")
+    assert eio._committed_files(str(table)) == {"bucket=1/ok=0/part-1.parquet": 2}
 
 
 def test_append_with_debris_keeps_ok_layout_and_table_readable(spark, tmp_path):
@@ -89,9 +74,11 @@ def test_append_with_debris_keeps_ok_layout_and_table_readable(spark, tmp_path):
     write_result(
         _mk(spark, [f"v{i}" for i in range(8)]), out, n_buckets=4, mode="append"
     )
-    table = os.path.join(out, "result")
-    assert eio._committed_partition_layout(table) == ["bucket", "ok"]
+    files = eio._committed_files(os.path.join(out, "result"))
+    assert files and all(f.count("/") == 2 and "/ok=" in f for f in files)
     assert eio.read_result(spark, out).count() == 16
+    m = json.loads((Path(out) / "_lineage" / "manifest.json").read_text())
+    assert m["totals"]["rows_in"] == 16
 
 
 # -- 2. atomic manifest ------------------------------------------------------
@@ -106,6 +93,20 @@ def test_manifest_write_is_atomic(spark, tmp_path):
     lineage = Path(out) / "_lineage"
     assert json.loads((lineage / "manifest.json").read_text())["totals"]["rows_in"] == 2
     assert not list(lineage.glob("*.tmp"))
+
+
+def test_manifest_is_fsynced_before_rename(spark, tmp_path, monkeypatch):
+    """tmp + rename alone survives a killed process, not a machine crash:
+    the tmp file's bytes must reach the disk before the rename publishes
+    it, or a power loss can surface a zero-length manifest.json."""
+    calls = []
+    real_fsync, real_replace = os.fsync, os.replace
+    monkeypatch.setattr(eio.os, "fsync", lambda fd: (calls.append("fsync"), real_fsync(fd))[1])
+    monkeypatch.setattr(
+        eio.os, "replace", lambda a, b: (calls.append("replace"), real_replace(a, b))[1]
+    )
+    write_result(_mk(spark, ["a", "b"]), str(tmp_path / "out"), n_buckets=4)
+    assert calls == ["fsync", "replace"]
 
 
 def test_resume_tolerates_torn_manifest(spark, tmp_path):
