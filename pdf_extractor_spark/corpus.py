@@ -180,12 +180,6 @@ def spandoc_to_payload(pages: list[dict]) -> bytes:
     )
 
 
-def payload_to_spandoc(payload: bytes) -> list[dict]:
-    if not payload.startswith(SPANDOC_MAGIC):
-        raise ValueError("not a spandoc payload")
-    return json.loads(zlib.decompress(payload[len(SPANDOC_MAGIC):]).decode("utf-8"))
-
-
 def random_html(rng: random.Random) -> bytes:
     """Synthetic boilerplate-heavy HTML page for the DOM-stripping path."""
     title = " ".join(rng.sample(_HEAD_WORDS, 2))

@@ -55,6 +55,8 @@ def get_spark(
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        # progress bars on stderr interleave with one-line JSON stdout
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # commit algorithm v2: task-side commit renames instead of a
         # serial driver-side pass — matters for many-bucket layouts

@@ -5,9 +5,8 @@ the binary column carries the document bytes):
   - ``spandoc``  — the span-table serialization produced by a PDF
     parser (the engine's contract boundary, SURVEY.md §5.2; no PDF
     library ships in this environment, so this IS the PDF path).
-  - ``pdf``      — raw %PDF bytes; parsed with PyMuPDF when importable
-    (import-try), else with the pure-Python parser in pdfparse.py.
-    Malformed PDFs raise → S4 failure rows.
+  - ``pdf``      — raw %PDF bytes, parsed with the pure-Python parser
+    in pdfparse.py. Malformed PDFs raise → S4 failure rows.
   - ``html``     — raw HTML bytes → DOM boilerplate-stripping path.
 Anything else is ``unknown`` → parse failure, counted in lineage.
 """
@@ -18,15 +17,9 @@ import json
 import zlib
 from typing import Optional
 
+from . import pdfparse
+
 SPANDOC_MAGIC = b"SPANDOC1"
-
-try:  # pragma: no cover - not installed in this environment
-    import fitz  # type: ignore
-
-    _HAS_FITZ = True
-except Exception:  # pragma: no cover
-    fitz = None
-    _HAS_FITZ = False
 
 
 def detect_kind(payload: Optional[bytes]) -> str:
@@ -47,25 +40,10 @@ def parse_spandoc(payload: bytes) -> list[dict]:
 
 
 def parse_pdf(payload: bytes) -> list[dict]:
-    """Real-PDF branch: PyMuPDF when importable (reference parity path,
-    extract_outline.py:19-35), else the pure-Python parser (pdfparse.py)
-    — both emit the same span-table shape as parse_spandoc so everything
-    downstream is identical."""
-    if not _HAS_FITZ:
-        from . import pdfparse
-
-        return pdfparse.extract_spans(payload)
-    doc = fitz.open(stream=payload, filetype="pdf")  # pragma: no cover
-    pages = []  # pragma: no cover
-    for page in doc:  # pragma: no cover
-        blocks = []
-        for b in page.get_text("dict")["blocks"]:
-            if "lines" not in b:
-                continue
-            blocks.append([line["spans"] for line in b["lines"]])
-        pages.append({"width": page.rect.width, "blocks": blocks})
-    doc.close()  # pragma: no cover
-    return pages  # pragma: no cover
+    """Real-PDF branch: the pure-Python parser (pdfparse.py) emits the
+    same span-table shape as parse_spandoc, so everything downstream is
+    identical."""
+    return pdfparse.extract_spans(payload)
 
 
 def parse_payload(payload: Optional[bytes]) -> tuple[str, Optional[list[dict]]]:

@@ -15,6 +15,7 @@ import refimpl
 from pdf_extractor_spark import corpus
 from pdf_extractor_spark.operators.extract import extract_pages
 from pdf_extractor_spark.schemas import PAGES_SCHEMA
+from pdf_extractor_spark.sources import payload as payload_mod
 
 
 @pytest.fixture(scope="module")
@@ -23,6 +24,10 @@ def result_rows(spark):
     pages_df = spark.createDataFrame(rows, schema=PAGES_SCHEMA)
     out = extract_pages(pages_df).collect()
     return rows, {r["url"]: r for r in out}
+
+
+def test_session_disables_console_progress(spark):
+    assert spark.sparkContext.getConf().get("spark.ui.showConsoleProgress") == "false"
 
 
 def test_every_input_row_has_a_result_row(result_rows):
@@ -37,7 +42,7 @@ def test_spandoc_byte_identity(result_rows):
         payload = row["html"]
         if not payload.startswith(corpus.SPANDOC_MAGIC):
             continue
-        pages = corpus.payload_to_spandoc(payload)
+        pages = payload_mod.parse_spandoc(payload)
         expected = refimpl.extract_document(pages)
         got = by_url[row["url"]]
         if expected is None:

@@ -23,6 +23,7 @@ import pytest
 from pdf_extractor_spark import corpus
 from pdf_extractor_spark.io import partition_payload_stats, size_aware_repartition
 from pdf_extractor_spark.operators.extract import extract_pages
+from pdf_extractor_spark.sources import payload
 
 N_DOCS = 1500
 HEAVY_EVERY = 101  # ~15 giants in 1500 docs
@@ -48,7 +49,8 @@ def test_heavy_tail_generator_deterministic_and_giant():
     base = corpus.build_pages_row(g, seed=SEED)  # same index, no tail
     assert len(row_a["html"]) > 20 * len(base["html"])
     # still a VALID document: payload round-trips through the parser shape
-    pages = corpus.payload_to_spandoc(row_a["html"])
+    assert payload.detect_kind(row_a["html"]) == "spandoc"
+    pages = payload.parse_spandoc(row_a["html"])
     assert len(pages) > 30  # ~60 concatenated spandocs' pages
     # the default corpus is untouched by the opt-in knob
     assert corpus.build_pages_row(g, seed=SEED)["html"] == base["html"]
